@@ -27,9 +27,14 @@ emulation (which pins DataFusion 44's VIEW labeling). psql users type
 classifies registered sources as BASE TABLEs, so 'r' is the
 reference-faithful answer on this surface.
 
-Scale note: every view is a few-hundred-row driver-built DataFrame of
-table/column metadata — introspection is a cold path by construction;
-nothing in the data plane reads these.
+Hot-path note: psql and BI sessions issue these queries constantly
+(every ``\\dt``, every ``\\d`` burst of 6-10 follow-ups, JDBC metadata
+calls), so introspection sits on the interactive serve path. Two
+choices keep it there cheaply: the snapshot check runs only job-free
+``SHOW`` metadata commands, and every view is an in-memory
+``LocalRelation`` (:func:`csvb_spark.sql.local_frame`) of a few hundred
+rows at most, so a catalog join plans without RDD scans or shuffles.
+Nothing in the data plane reads these views.
 """
 
 from __future__ import annotations
@@ -38,13 +43,17 @@ import re
 import threading
 import zlib
 from collections import namedtuple
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 # char-aware column snapshot (name, dataType string, nullable) — same
 # attribute names the catalog Column API exposed, so the fingerprint
 # and pg_attribute builds read it unchanged
 _ColInfo = namedtuple("_ColInfo", ["name", "dataType", "nullable"])
+# one listed relation: tableType is TEMPORARY, VIEW (persistent) or TABLE
+_TableInfo = namedtuple("_TableInfo", ["name", "schema", "tableType"])
 
 __all__ = ["refresh_pg_catalog", "rewrite_pg_catalog_sql"]
 
@@ -63,6 +72,11 @@ BUILTIN_FUNCTIONS_CONF = "csvb.pg_catalog.builtin_functions"
 #: traffic). With the lock, one connection builds and the rest hit
 #: the snapshot cache.
 _REFRESH_LOCK = threading.Lock()
+
+#: snapshot passes per refresh while DDL keeps racing the listing: under
+#: a temp-view create/drop storm about half the passes lose the race,
+#: so a single retry can lose twice in a row
+_RACE_ATTEMPTS = 3
 
 
 def _oid(key: str) -> int:
@@ -117,128 +131,160 @@ def refresh_pg_catalog(spark: SparkSession) -> None:
     """(Re)build the ``pg_catalog_pg_*`` temp views from the live
     session catalog — driver-side metadata only, called lazily when a
     query actually references pg_catalog. One psql ``\\d`` issues
-    6-10 catalog follow-up queries back-to-back, so rebuilds are
-    CACHED on a snapshot key of (tables, types, databases, UDFs) and
-    SERIALIZED behind a lock: only a catalog change triggers the
-    per-table listColumns round trips and view rebuilds, and
-    concurrent cold connections share one build. A catalog mutated
-    mid-snapshot (DDL racing the listTables) gets ONE retry — the
-    second pass sees a settled catalog — but ONLY for the known
-    transient race signatures; a deterministic failure (a schema bug
-    in one mk() call) re-raises immediately instead of running the
-    whole ~25-view rebuild twice and surfacing the second traceback.
-    The snapshot is TWO-STAGE (see the cheap-key comment in the
-    builder): list-level key + DDL epoch on the fast path, per-table
-    column fingerprints only when the epoch or lists move — so CREATE
-    OR REPLACE TEMP VIEW under the SAME name with a different column
-    set refreshes on the next introspection (the round-11 staleness
-    corner) while a steady-state \\d burst pays zero listColumns
-    round trips."""
+    6-10 catalog follow-up queries back-to-back and every ``\\dt``
+    lands here, so rebuilds are CACHED on a two-stage snapshot and
+    SERIALIZED behind a lock (concurrent cold connections share one
+    build):
+
+    1. The fast key — ``SHOW NAMESPACES``, ``SHOW TABLES``, ``SHOW
+       VIEWS`` and ``SHOW USER FUNCTIONS`` plus the builtins flag and
+       the DDL epoch ``sql.execute_sql`` bumps. These commands run on
+       the driver and launch NO Spark job, so a cache hit costs a few
+       command round trips (tens of ms) and no ``spark.catalog.list*``
+       or per-table schema call.
+    2. Only when the fast key moves: per-table column fingerprints.
+       CREATE OR REPLACE TEMP VIEW under the SAME name with a different
+       column set then refreshes on the next introspection, while an
+       epoch bump that changed nothing (a CTAS re-creating an identical
+       schema) revalidates the fast key without a rebuild.
+
+    A catalog mutated mid-snapshot (DDL racing the listing) is listed
+    again, up to ``_RACE_ATTEMPTS`` passes in all — a later pass sees a
+    settled catalog — but ONLY for the known transient race signatures;
+    a deterministic failure (a schema bug in one mk() call) re-raises
+    immediately instead of running the whole ~25-view rebuild again
+    and surfacing a later traceback."""
     with _REFRESH_LOCK:
-        try:
-            _refresh_pg_catalog_locked(spark)
-        except Exception as ex:  # noqa: BLE001 — see transient list below
-            if not _is_transient_catalog_race(ex):
-                raise
-            _refresh_pg_catalog_locked(spark)
+        for attempt in range(1, _RACE_ATTEMPTS + 1):
+            try:
+                _refresh_pg_catalog_locked(spark)
+                return
+            except Exception as ex:  # noqa: BLE001 — see the race check below
+                if attempt == _RACE_ATTEMPTS or not _is_transient_catalog_race(ex):
+                    raise
 
 
 def _is_transient_catalog_race(ex: Exception) -> bool:
-    """The two failure shapes observed when session DDL races the
-    snapshot: Spark's listTables/listColumns machinery surfacing
-    PARSE_EMPTY_STATEMENT, and a table listed by listTables being
-    dropped before its listColumns lands. Anything else is a real bug
-    and must surface on the FIRST traceback."""
+    """The failure shapes observed when session DDL races the snapshot.
+    With the SHOW-based listing it is a table listed by ``SHOW TABLES``
+    being dropped before its ``spark.table`` schema read lands
+    (TABLE_OR_VIEW_NOT_FOUND — the only signature a temp-view
+    create/drop storm with concurrent query traffic produced). The two
+    parse-error shapes Spark's catalog machinery surfaced under the
+    same race stay listed: they are exact signatures, not a broad
+    catch. Anything else is a real bug and must surface on the FIRST
+    traceback."""
     text = f"{type(ex).__name__}: {ex}"
     return any(
         marker in text
         for marker in (
-            "PARSE_EMPTY_STATEMENT",
             "TABLE_OR_VIEW_NOT_FOUND",
+            "PARSE_EMPTY_STATEMENT",
             "PARSE_SYNTAX_ERROR",  # empty-identifier variant of the same race
         )
     )
 
 
+_SHOW_COMMANDS = (
+    "SHOW NAMESPACES", "SHOW VIEWS", "SHOW TABLES", "SHOW USER FUNCTIONS",
+)
+_SHOW_POOL = ThreadPoolExecutor(
+    max_workers=len(_SHOW_COMMANDS), thread_name_prefix="pg-catalog-show"
+)
+
+
+def _catalog_listing(spark: SparkSession) -> tuple:
+    """The fast snapshot key's catalog part, read with metadata
+    commands only: ``SHOW`` runs on the driver and launches no Spark
+    job, where ``spark.catalog.listTables/listFunctions`` run JVM
+    ``toLocalIterator`` jobs plus several py4j calls per row (~1 s on a
+    cache hit, ``listFunctions`` walking all ~550 builtins).
+
+    Returns ``(dbs, tables, user_fns)``: sorted namespace names, sorted
+    ``_TableInfo`` rows of the current namespace plus the session's
+    temp views (exactly ``listTables()``'s scope), and the sorted
+    ``SHOW USER FUNCTIONS`` names. ``SHOW TABLES`` carries only
+    ``isTemporary``, so ``SHOW VIEWS`` supplies the persistent-VIEW
+    kind — a same-name TABLE→VIEW swap flips relkind 'r'→'v' and must
+    move the key. MANAGED↔EXTERNAL changes no emitted row, so the key
+    does not carry it. The user-function list is a superset of the
+    UDFs ``pg_proc`` shows, which is safe for a key.
+
+    The four commands run side by side on a small pool: each costs a
+    JVM parse/execute plus ~8 py4j round trips, and under serve load
+    every round trip also waits for the GIL behind the pgwire encode
+    threads, so overlapping them cuts the cache-hit latency ~2.5x. The
+    pool threads carry the caller's local properties (job group, FAIR
+    pool), so anything Spark ever ran for them is still attributed to
+    the statement that asked."""
+    show = inheritable_thread_target(spark)(lambda q: spark.sql(q).collect())
+    namespaces, views, listed, functions = _SHOW_POOL.map(show, _SHOW_COMMANDS)
+    dbs = tuple(sorted(r.namespace for r in namespaces))
+    persistent_views = {
+        (r.namespace, r.viewName) for r in views if not r.isTemporary
+    }
+    tables = tuple(
+        sorted(
+            _TableInfo(
+                r.tableName,
+                r.namespace or "default",  # temp views: no namespace
+                "TEMPORARY" if r.isTemporary
+                else "VIEW" if (r.namespace, r.tableName) in persistent_views
+                else "TABLE",
+            )
+            for r in listed
+            # both emulations' own backing views are machinery
+            if not r.tableName.startswith(("pg_catalog_", "information_schema_"))
+        )
+    )
+    user_fns = tuple(
+        sorted(r.function for r in functions if not r.function.startswith("pg_"))
+    )
+    return dbs, tables, user_fns
+
+
 def _refresh_pg_catalog_locked(spark: SparkSession) -> None:
     from csvb_spark.server.pgwire import _ELEM_ARRAY, _oid_for
+    from csvb_spark.sql import local_frame
 
     def mk(rows: list, schema: str, name: str) -> None:
-        spark.createDataFrame(rows, schema).createOrReplaceTempView(
+        local_frame(spark, rows, schema).createOrReplaceTempView(
             f"pg_catalog_{name}"
         )
 
-    dbs = [d.name for d in spark.catalog.listDatabases()]
-    cat_tables = [
-        t
-        for t in spark.catalog.listTables()
-        if not t.name.startswith(("pg_catalog_", "information_schema_"))
-    ]
-    # \df source: the session's REGISTERED UDFs — Spark marks all ~550
-    # builtins isTemporary too, so the discriminator is the className
-    # (UDFRegistration lambdas vs catalyst expression classes); the
-    # builtins stay hidden exactly like postgres hides pg_catalog's,
-    # unless SET csvb.pg_catalog.builtin_functions=true opts into
-    # surfacing them (namespace pg_catalog, like postgres's own).
-    # Part of the snapshot key so a UDF registered mid-session shows
-    # up in \df without waiting for an unrelated table DDL.
     show_builtins = (
         str(spark.conf.get(BUILTIN_FUNCTIONS_CONF, "false")).lower() == "true"
     )
-    all_fns = spark.catalog.listFunctions()
-    fn_names = sorted(
-        f.name
-        for f in all_fns
-        if f.isTemporary
-        and not f.name.startswith("pg_")
-        and "UDFRegistration" in (f.className or "")
-    )
-    builtin_names = (
-        sorted(
-            {f.name for f in all_fns if not f.name.startswith("pg_")}
-            - set(fn_names)
-        )
-        if show_builtins
-        else []
-    )
-    # TWO-STAGE snapshot (round 12, after review): the cheap key is
-    # table/function LISTS plus the DDL epoch sql.execute_sql bumps on
+    dbs, cat_tables, user_fns = _catalog_listing(spark)
+    # TWO-STAGE snapshot. Stage 1, the fast key: the SHOW listings,
+    # the builtins flag and the DDL epoch sql.execute_sql bumps on
     # every CREATE/DROP/ALTER it runs. A psql \d burst (6-10 catalog
-    # queries back-to-back) hits the cheap key and pays ZERO per-table
-    # listColumns round trips; only an epoch bump or a list change
-    # triggers the column-fingerprint pass below, which catches the
-    # round-11 staleness corner (CREATE OR REPLACE TEMP VIEW under the
-    # SAME name with a different column set — no list change, but the
-    # epoch moved). Narrowed known corner: a same-name swap issued
+    # queries back-to-back) and every steady-state \dt hit it and pay
+    # no Spark job and no per-table schema round trip. Stage 2, only
+    # when the epoch or a listing moved: the column fingerprint below,
+    # which catches CREATE OR REPLACE TEMP VIEW under the SAME name
+    # with a different column set (no listing change, but the epoch
+    # moved). Narrowed known corner: a same-name column swap issued
     # through the raw Python API (never execute_sql) skips the epoch
     # and stays stale until the next DDL — the serve path, where \d
     # lives, always goes through execute_sql.
-    cheap = (
-        tuple(sorted(dbs)),
-        tuple(
-            sorted(
-                (
-                    t.name,
-                    t.namespace[0] if t.namespace else "default",
-                    t.tableType or "",
-                )
-                for t in cat_tables
-            )
-        ),
-        tuple(fn_names),
+    fast = (
+        dbs,
+        cat_tables,
+        user_fns,
         show_builtins,
         getattr(spark, "_csvb_catalog_epoch", 0),
     )
-    if getattr(spark, "_csvb_pg_catalog_cheap", None) == cheap:
+    if getattr(spark, "_csvb_pg_catalog_fast", None) == fast:
         return
     # schema fields, not catalog.listColumns: the Column API erases
     # char/varchar to 'string', while the field METADATA keeps the
     # bounded type — which is what lets \d render 'character
-    # varying(12)' like postgres (round 13; same fix as
+    # varying(12)' like postgres (same fix as
     # sql.refresh_information_schema). Collected into plain tuples so
     # the fingerprint and row builds below stay shape-stable.
-    def _cols(name: str) -> list:
-        return [
+    def _cols(name: str) -> tuple:
+        return tuple(
             _ColInfo(
                 f.name,
                 f.metadata.get("__CHAR_VARCHAR_TYPE_STRING")
@@ -246,34 +292,48 @@ def _refresh_pg_catalog_locked(spark: SparkSession) -> None:
                 f.nullable,
             )
             for f in spark.table(name).schema.fields
-        ]
+        )
 
     table_cols = {t.name: _cols(t.name) for t in cat_tables}
     snap = (
-        tuple(sorted(dbs)),
-        tuple(
-            sorted(
-                (
-                    t.name,
-                    t.namespace[0] if t.namespace else "default",
-                    t.tableType or "",
-                    # schema fingerprint: names + types + nullability
-                    tuple(
-                        (c.name, c.dataType, c.nullable)
-                        for c in table_cols[t.name]
-                    ),
-                )
-                for t in cat_tables
-            )
-        ),
-        tuple(fn_names),
+        dbs,
+        tuple((t, table_cols[t.name]) for t in cat_tables),
+        user_fns,
         show_builtins,
     )
     if getattr(spark, "_csvb_pg_catalog_snap", None) == snap:
         # epoch moved but nothing actually changed (e.g. a CTAS that
-        # re-created an identical schema) — revalidate the cheap key
-        spark._csvb_pg_catalog_cheap = cheap  # noqa: SLF001
+        # re-created an identical schema) — revalidate the fast key
+        spark._csvb_pg_catalog_fast = fast  # noqa: SLF001
         return
+
+    # \df source: the session's REGISTERED UDFs — the discriminator is
+    # the className (UDFRegistration lambdas vs the SQL shims'
+    # 'sqlFunction.'); the builtins stay hidden exactly like postgres
+    # hides pg_catalog's, unless SET csvb.pg_catalog.builtin_functions=
+    # true opts into surfacing them (namespace pg_catalog, like
+    # postgres's own). getFunction per user function is a handful of
+    # py4j calls and no job.
+    fn_names = []
+    for name in user_fns:
+        f = spark.catalog.getFunction(name)
+        if f.isTemporary and "UDFRegistration" in (f.className or ""):
+            fn_names.append(name)
+    # SHOW FUNCTIONS qualifies persistent functions
+    # (spark_catalog.default.f); no builtin name has a dot, so the last
+    # part is the bare name listFunctions used to give
+    builtin_names = (
+        sorted(
+            {
+                r.function.rsplit(".", 1)[-1]
+                for r in spark.sql("SHOW FUNCTIONS").collect()
+                if not r.function.startswith("pg_")
+            }
+            - set(fn_names)
+        )
+        if show_builtins
+        else []
+    )
 
     # pseudo-oids are 28-bit crc32s — a collision between two catalog
     # objects would silently merge their pg_attribute rows (\d on one
@@ -291,7 +351,7 @@ def _refresh_pg_catalog_locked(spark: SparkSession) -> None:
 
     # EVERY namespace that will be referenced gets its oid and its
     # pg_namespace row here — dbs, information_schema, default, and
-    # any table namespace outside listDatabases (e.g. a catalog-plugin
+    # any table namespace outside SHOW NAMESPACES (e.g. a catalog-plugin
     # schema). Review r12: the previous `ns_oids.get(schema) or
     # fresh_oid(...)` fallback was unmemoized — two tables in one
     # unlisted schema minted two different relnamespace oids, neither
@@ -299,7 +359,7 @@ def _refresh_pg_catalog_locked(spark: SparkSession) -> None:
     schemas = (
         set(dbs)
         | {"information_schema", "default"}
-        | {t.namespace[0] if t.namespace else "default" for t in cat_tables}
+        | {t.schema for t in cat_tables}
     )
     ns_oids = {n: fresh_oid("ns:" + n) for n in sorted(schemas)}
     ns_rows = [(ns_oids[n], n, 10, None) for n in sorted(schemas)]
@@ -312,8 +372,7 @@ def _refresh_pg_catalog_locked(spark: SparkSession) -> None:
 
     classes, attrs = [], []
     for t in sorted(cat_tables, key=lambda t: t.name):
-        schema = t.namespace[0] if t.namespace else "default"
-        rel_oid = fresh_oid(f"rel:{schema}.{t.name}")
+        rel_oid = fresh_oid(f"rel:{t.schema}.{t.name}")
         # registered scans are the engine's TABLES (see module note);
         # only a persistent logical VIEW reports 'v'
         relkind = "v" if t.tableType == "VIEW" else "r"
@@ -321,7 +380,7 @@ def _refresh_pg_catalog_locked(spark: SparkSession) -> None:
             (
                 rel_oid,
                 t.name,
-                ns_oids[schema],
+                ns_oids[t.schema],
                 relkind,
                 10,          # relowner
                 2,           # relam (heap)
@@ -517,9 +576,7 @@ def _refresh_pg_catalog_locked(spark: SparkSession) -> None:
         ),
     }
     for name, schema in empties.items():
-        spark.createDataFrame([], schema).createOrReplaceTempView(
-            f"pg_catalog_{name}"
-        )
+        mk([], schema, name)
 
     # array oids render postgres-style 'elem[]' (real[], bigint[]) —
     # the map is a plain local dict so the UDF closure pickles by
@@ -545,7 +602,7 @@ def _refresh_pg_catalog_locked(spark: SparkSession) -> None:
 
     spark.udf.register("pg_format_type", _format_type, "string")
     spark._csvb_pg_catalog_snap = snap  # noqa: SLF001 — session-scoped cache
-    spark._csvb_pg_catalog_cheap = cheap  # noqa: SLF001 — fast-path key
+    spark._csvb_pg_catalog_fast = fast  # noqa: SLF001 — fast-path key
 
 
 # ---- textual rewrites ------------------------------------------------

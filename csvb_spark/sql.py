@@ -28,9 +28,12 @@ Every front-end (CLI exec, pgwire server) funnels through
 
 from __future__ import annotations
 
+import functools
+import json
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _INFO_SCHEMA_RE = re.compile(
     r"\binformation_schema\s*\.\s*(tables|columns|views|schemata|df_settings)\b",
@@ -128,6 +131,36 @@ def _arrow_type_name(dt: str) -> str:
     return dt  # maps/structs/intervals: keep the Spark rendering
 
 
+@functools.lru_cache(maxsize=None)
+def _ddl_json(schema: str) -> str:
+    # the emulation schemas are module constants: parse each DDL
+    # string once per process (the parse is a JVM round trip); the
+    # cache holds the immutable JSON form, never a shared StructType
+    return StructType.fromDDL(schema).json()
+
+
+def local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """Driver-built rows → a DataFrame that plans as an in-memory
+    ``LocalRelation`` (``LocalTableScan``). Both catalog emulations
+    (information_schema here, pg_catalog in ``server/pg_catalog.py``)
+    build their views through this: ``createDataFrame(list)`` plans as
+    ``Scan ExistingRDD``, and a join over such views runs shuffle and
+    broadcast jobs even for a dozen rows (psql's ``\\dt``: ~9 jobs). A
+    ``pyarrow.Table`` input always takes the Arrow path (a pandas input
+    skips Arrow when empty and falls back to an RDD silently on error),
+    and the JVM turns it into a LocalRelation without launching a job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromJson(json.loads(_ddl_json(schema)))
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def refresh_information_schema(spark: SparkSession) -> None:
     """(Re)build information_schema_{tables,columns} temp views from
     the live session catalog. With ``csvb.information_schema.
@@ -172,10 +205,11 @@ def refresh_information_schema(spark: SparkSession) -> None:
                     *_type_metadata(dt),
                 )
             )
-    spark.createDataFrame(
-        tables or [("spark_catalog", "default", "", "VIEW")],
+    local_frame(
+        spark,
+        tables,
         "table_catalog string, table_schema string, table_name string, table_type string",
-    ).filter("table_name <> ''").createOrReplaceTempView("information_schema_tables")
+    ).createOrReplaceTempView("information_schema_tables")
     # Column layout pinned to DataFusion 44's information_schema.columns
     # (the reference enables it via csvb_engine/src/lib.rs:22): the full
     # 15-column SQL-standard shape, names and order. The type-DERIVED
@@ -191,21 +225,16 @@ def refresh_information_schema(spark: SparkSession) -> None:
     # registrable table here carries a default (temp views over
     # files), and engines that do fill it (DuckDB, postgres) also
     # render absent defaults as NULL.
-    spark.createDataFrame(
-        columns
-        or [
-            (
-                "spark_catalog", "default", "", "", 0, "", "YES",
-                None, None, None, None, None, None,
-            )
-        ],
+    local_frame(
+        spark,
+        columns,
         "table_catalog string, table_schema string, table_name string, "
         "column_name string, ordinal_position int, data_type string, "
         "is_nullable string, character_maximum_length bigint, "
         "numeric_precision bigint, numeric_precision_radix bigint, "
         "numeric_scale bigint, datetime_precision bigint, "
         "interval_type string",
-    ).filter("table_name <> ''").selectExpr(
+    ).selectExpr(
         "table_catalog",
         "table_schema",
         "table_name",
@@ -223,15 +252,17 @@ def refresh_information_schema(spark: SparkSession) -> None:
         "interval_type",
     ).createOrReplaceTempView("information_schema_columns")
     views = [t for t in tables if t[3] == "VIEW"]
-    spark.createDataFrame(
-        [(c, s, n, None) for c, s, n, _ in views] or [("", "", "", None)],
+    local_frame(
+        spark,
+        [(c, s, n, None) for c, s, n, _ in views],
         "table_catalog string, table_schema string, table_name string, "
         "definition string",
-    ).filter("table_name <> ''").createOrReplaceTempView("information_schema_views")
+    ).createOrReplaceTempView("information_schema_views")
     # schemata likewise pinned to DataFusion 44's 7-column layout; the
     # owner/charset/sql_path columns are NULL there too (DataFusion
     # fills them with NULL for every schema)
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(d.catalog or "spark_catalog", d.name) for d in spark.catalog.listDatabases()]
         or [("spark_catalog", "default")],
         "catalog_name string, schema_name string",

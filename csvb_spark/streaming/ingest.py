@@ -402,8 +402,7 @@ def _sink_batch(
     # the (doc_id, sig, band_id, band_key) table once (bounded by
     # batch size × bands — fixed-width rows); the probe consumes it
     # via dedup_incremental(new_bands=...) and the index write reuses
-    # the surviving rows via write_band_index_from_bands. persist(),
-    # not localCheckpoint: checkpoint blocks are only freed when the
+    # the surviving rows via write_band_index_from_bands.
     # localCheckpoint, NOT persist: an A/B this round measured
     # persist() +30 s on the 8-batch decontam-gated stream — without
     # lineage truncation every bands consumer re-plans (and on a cache

@@ -2897,6 +2897,108 @@ def test_pg_catalog_cheap_key_skips_listcolumns(spark, sf_dir, monkeypatch):
     assert calls["n"] > 0
 
 
+def test_pg_catalog_fast_key_launches_no_spark_job(spark, sf_dir):
+    """A settled snapshot answers the cache check with SHOW metadata
+    commands only: five refreshes (a \\d burst) launch zero Spark
+    jobs, counted through a statusTracker job group."""
+    from csvb_spark.server.pg_catalog import refresh_pg_catalog
+    from csvb_spark.sources.catalog import register_views
+
+    register_views(spark, sf_dir)
+    refresh_pg_catalog(spark)  # settle the snapshot
+    sc = spark.sparkContext
+    group = "pgcat-fast-key"
+    sc.setJobGroup(group, "pg_catalog fast key")
+    try:
+        for _ in range(5):
+            refresh_pg_catalog(spark)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_pg_catalog_fast_key_skips_catalog_listing(spark, sf_dir, monkeypatch):
+    """The fast key reads no ``spark.catalog.list*`` (JVM
+    toLocalIterator jobs, per-row py4j calls) and no per-table
+    ``spark.table`` schema."""
+    from pyspark.sql.catalog import Catalog
+
+    from csvb_spark.server.pg_catalog import refresh_pg_catalog
+    from csvb_spark.sources.catalog import register_views
+
+    register_views(spark, sf_dir)
+    refresh_pg_catalog(spark)  # settle the snapshot
+
+    calls: list = []
+
+    def spy(name, real):
+        def wrapper(*a, **kw):
+            calls.append(name)
+            return real(*a, **kw)
+        return wrapper
+
+    for name in ("listTables", "listFunctions", "listDatabases"):
+        monkeypatch.setattr(Catalog, name, spy(name, getattr(Catalog, name)))
+    monkeypatch.setattr(spark, "table", spy("table", spark.table))
+    for _ in range(5):
+        refresh_pg_catalog(spark)
+    assert calls == []
+
+
+def test_pg_catalog_views_plan_as_local_relations(spark, sf_dir):
+    """Every pg_catalog_* view is an in-memory LocalRelation. An RDD
+    scan here would mean the Arrow build silently fell back, and the
+    \\dt join would run shuffle and broadcast jobs again."""
+    from csvb_spark.server.pg_catalog import refresh_pg_catalog
+    from csvb_spark.sources.catalog import register_views
+
+    register_views(spark, sf_dir)
+    refresh_pg_catalog(spark)
+    views = [
+        r.tableName
+        for r in spark.sql("SHOW TABLES").collect()
+        if r.tableName.startswith("pg_catalog_")
+    ]
+    assert len(views) >= 20, views
+    for name in views:
+        plan = spark.sql(f"EXPLAIN SELECT * FROM {name}").collect()[0][0]
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, (
+            name, plan,
+        )
+
+
+def test_pg_catalog_raw_api_table_to_view_swap_refreshes(spark):
+    """A same-name persistent TABLE→VIEW swap issued through the raw
+    API (no execute_sql, so no epoch bump, and an unchanged SHOW TABLES
+    row) must still move the fast key: SHOW VIEWS carries the kind, and
+    \\d's relkind turns 'r'→'v'."""
+    from csvb_spark.sql import execute_sql
+
+    def relkind() -> list:
+        return [
+            r[0]
+            for r in execute_sql(
+                spark,
+                "SELECT c.relkind FROM pg_catalog.pg_class c "
+                "WHERE c.relname = 't_pgcat_kind'",
+            ).collect()
+        ]
+
+    spark.sql("CREATE TABLE t_pgcat_kind (a INT) USING parquet")
+    try:
+        assert relkind() == ["r"]
+        epoch = getattr(spark, "_csvb_catalog_epoch", 0)
+        spark.sql("DROP TABLE t_pgcat_kind")
+        spark.sql("CREATE VIEW t_pgcat_kind AS SELECT CAST(1 AS INT) AS a")
+        assert getattr(spark, "_csvb_catalog_epoch", 0) == epoch
+        assert relkind() == ["v"]
+    finally:
+        spark.sql("DROP VIEW IF EXISTS t_pgcat_kind")
+        spark.sql("DROP TABLE IF EXISTS t_pgcat_kind")
+
+
 def test_pg_catalog_builtin_functions_flag(spark, sf_dir):
     """Verdict r11 item 7: SET csvb.pg_catalog.builtin_functions=true
     surfaces Spark's builtin registry in pg_proc under namespace
